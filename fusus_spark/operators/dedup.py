@@ -70,7 +70,9 @@ def ngram_jaccard_pairs(
     """Candidate pairs with n-gram Jaccard >= threshold.
 
     Plan: inverted index join on shingle (only co-occurring docs meet),
-    one agg for intersection size, broadcast-joined per-doc set sizes.
+    one agg for intersection size, then unhinted joins to the per-doc
+    set sizes: that table has one row per document, so it is
+    corpus-sized and must not be forced into a broadcast.
     Returns (doc_a, doc_b, inter, size_a, size_b, jaccard), doc_a < doc_b.
 
     ``df_cap`` is the standard inverted-index stop-shingle prefilter:
@@ -113,8 +115,8 @@ def ngram_jaccard_pairs(
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
     out = (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.round(

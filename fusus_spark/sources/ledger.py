@@ -8,8 +8,12 @@ page, re-run only selected pages); ours is the **url-hash bucket**:
 * input is laid out partitioned by ``bucket = pmod(xxhash64(url, salt), N)``
   (at real scale: Iceberg ``days(warc_ts) + bucket(N, url)`` — reading
   one bucket prunes to one partition directory, never a full scan);
-* each bucket is processed independently and committed atomically IN
-  TWO STAGES: output parquet is written to a staging dir
+* each bucket is processed independently — its parse spread over the
+  cluster's ``defaultParallelism`` tasks by the salted url hash
+  (``repartition_salted``: a bucket can be one unsplittable parquet
+  file, so without it the whole bucket would parse on one core) — and
+  committed atomically IN TWO STAGES: output parquet is written to a
+  staging dir
   ``out.staging/bucket=k-<uuid>`` — a SIBLING tree, entirely outside
   the reader's path, so a concurrent reader of ``out/`` can never see
   a half-written bucket (Spark 4's partition inference trips even on
@@ -22,6 +26,9 @@ page, re-run only selected pages); ours is the **url-hash bucket**:
   replaces the whole bucket;
 * resume = skip buckets whose ledger row says done AND whose recorded
   input lineage still matches;
+* the ledger row's input metrics (rows_in, bytes_in) are observed in
+  the pass that extracts and writes the bucket (``DataFrame.observe``),
+  so no scan of the bucket runs only for its statistics;
 * concurrent writers: each bucket is guarded by a ``BucketLock``
   (O_EXCL lock file under ``<ledger>/locks/``) — two job instances
   against the same output PARTITION the un-done buckets between them
@@ -46,9 +53,13 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from fusus_spark.extraction.pipeline import extract_stage, words_from_stage
+from fusus_spark.extraction.pipeline import (
+    extract_stage,
+    repartition_salted,
+    words_from_stage,
+)
 
 BUCKET_SALT = 42
 
@@ -356,6 +367,12 @@ def run_extraction_job(
 ) -> dict:
     """Resumable bucket-at-a-time extraction job.
 
+    Buckets run one after another, but each bucket's parse is spread
+    over ``spark.sparkContext.defaultParallelism`` tasks by the salted
+    url hash, so one bucket keeps every core busy. The ledger's
+    ``rows_in``/``bytes_in`` are observed in the same pass that extracts
+    and writes the bucket; no separate statistics scan runs.
+
     ``emit`` selects the output tables: the parse-derived kinds come
     from ONE fused parse per bucket (the stage is persisted across
     their writes when more than one is requested — bounded by bucket
@@ -444,15 +461,26 @@ def run_extraction_job(
                 from fusus_spark.operators.robots import apply_robots_optout
 
                 docs = apply_robots_optout(docs)
-            stats = docs.agg(
-                F.count("*").alias("rows_in"),
+            # rows_in/bytes_in ride the writes' own pass over the bucket
+            # instead of a second scan: every write below reads the
+            # observed frame, so the first one fires the observation
+            # whatever ``emit`` holds (get() would block for ever if no
+            # action ran on it)
+            observation = Observation()
+            docs = docs.observe(
+                observation,
+                F.count(F.lit(1)).alias("rows_in"),
                 F.coalesce(F.sum(F.octet_length("html")), F.lit(0)).alias("bytes_in"),
-            ).first()
+            )
             stage = None
             persisted = False
             if stage_kinds:
+                # a bucket can be one unsplittable parquet file, so
+                # without the salted repartition its whole parse would
+                # be one task; the doc-level kinds keep the unshuffled
+                # frame (map-side projections need no shuffle)
                 stage = extract_stage(
-                    docs,
+                    repartition_salted(docs, spark.sparkContext.defaultParallelism),
                     max_html_bytes=max_html_bytes,
                     emit_words=("words" in emit),
                 )
@@ -507,6 +535,7 @@ def run_extraction_job(
             for tmp_dir, final_dir, staging_root in staged:
                 _commit_bucket(tmp_dir, final_dir, staging_root, bucket)
             primary = per_kind.get("words") or per_kind[emit[0]]
+            stats = observation.get
             ledger.mark_done(
                 bucket,
                 rows_in=stats["rows_in"],

@@ -24,7 +24,6 @@ CHECKS = {
     # one MapInArrow node, and no second python stage (int = exact count
     # of plan-detail nodes '(n) <op>')
     "extract_removals": [("MapInArrow", 1), ("MapInPandas", False)],
-    "top_orders": [("BroadcastHashJoin", True)],
     "nation_revenue": [("BroadcastHashJoin", True), ("HashAggregate", True)],
     "pricing_summary": [("HashAggregate", True), ("PushedFilters", None)],
     "token_stats": [("codegen id", True)],  # whole-stage codegen spans
